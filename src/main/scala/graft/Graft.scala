@@ -11,12 +11,14 @@ import org.apache.spark.sql.functions._
   * the reference switches by pointing this at a table directory; each
   * verb composes the operator layer (ReferenceOps/ExportOps/FtsOps/
   * Pipeline) and returns DataFrames (render with [[Render.table]]).
+  * Each verb reads the records table at most once, through
+  * [[records]] (declared schema, see [[Pipeline.recordsFrame]]).
   */
 final class Graft(spark: SparkSession, tableDir: String) {
 
   private val pipeline = new Pipeline(spark, tableDir)
 
-  def records: DataFrame = Catalog.load(spark, pipeline.recordsPath)
+  def records: DataFrame = pipeline.recordsFrame
 
   /** `setup` — persist compliance checks for the given adapters
     * (ethical_crawler.py:1116–1154). Returns the checks run.
@@ -80,12 +82,12 @@ final class Graft(spark: SparkSession, tableDir: String) {
     * in as a one-row relation.
     */
   def searchFtsRanked(terms: Seq[String], limit: Int = 10): DataFrame = {
-    val nDocs = records.agg(count(lit(1)).as("n_docs"))
+    val r = records
     if (spark.catalog.tableExists(ftsTable))
-      FtsOps.searchRankedIndexed(spark, ftsTable, nDocs, "record_id",
-        terms, limit)
+      FtsOps.searchRankedIndexed(spark, ftsTable,
+        r.agg(count(lit(1)).as("n_docs")), "record_id", terms, limit)
     else FtsOps.searchRankedDocs(
-      records.select(col("record_id"),
+      r.select(col("record_id"),
         concat_ws(" ", col("title"), col("description")).as("text")),
       "record_id", "text", terms, limit)
   }
@@ -100,9 +102,7 @@ final class Graft(spark: SparkSession, tableDir: String) {
     * delivery becomes exactly-once-per-key in the table.
     */
   def collectStream(landingDir: String, checkpointDir: String): Unit = {
-    val schema =
-      org.apache.spark.sql.Encoders.product[DataRecord].schema
-    val stream = spark.readStream.schema(schema)
+    val stream = spark.readStream.schema(Pipeline.RecordsSchema)
       .option("maxFilesPerTrigger", "1").parquet(landingDir)
     streaming.StreamingOps.dedupAppendSink(stream, spark,
       pipeline.recordsPath, keys = Seq("source_name", "record_id"),
@@ -167,16 +167,10 @@ final class Graft(spark: SparkSession, tableDir: String) {
     * reference-stubbed analytics (tags/temporal/license)
     * (ethical_crawler.py:1274–1349).
     */
-  def analytics(): Map[String, DataFrame] = Map(
-    "source_stats" -> ReferenceOps.sourceStats(records,
-      key = "source_name", distinctCol = "data_type",
-      avgCol = "size_bytes", spanCol = "ingested_at"),
-    "type_counts" -> ReferenceOps.typeCounts(records, "data_type"),
-    "popular_tags" -> ReferenceOps.popularTags(records, col("tags"), 20),
-    "temporal_activity" ->
-      ReferenceOps.temporalActivity(records, "ingested_at"),
-    "license_distribution" ->
-      ReferenceOps.licenseDistribution(records, "license_info"))
+  def analytics(): Map[String, DataFrame] = {
+    val r = records
+    Graft.AnalyticsViews.map { case (name, build) => name -> build(r) }
+  }
 
   /** [[analytics]] served from a parquet materialization under
     * `$tableDir/mv/` — rebuilt only when the records table has changed
@@ -185,10 +179,11 @@ final class Graft(spark: SparkSession, tableDir: String) {
     * every analytics block per CLI call (ethical_crawler.py:1274).
     */
   def analyticsMaterialized(name: String): DataFrame = {
-    require(analytics().contains(name), s"unknown analytics view: $name")
+    require(Graft.AnalyticsViews.contains(name),
+      s"unknown analytics view: $name")
     Mv.readFresh(spark,
       Mv.View(s"$tableDir/mv/$name", Seq(pipeline.recordsPath)),
-      _ => analytics()(name))
+      _ => Graft.AnalyticsViews(name)(records))
   }
 
   /** `status` — two-key stats rolled up per source joined with the
@@ -200,8 +195,7 @@ final class Graft(spark: SparkSession, tableDir: String) {
       .agg(count(lit(1)).as("n_records"),
         countDistinct(col("data_type")).as("n_types"),
         max(col("ingested_at")).as("last_ingested"))
-    val latestCheck = ReferenceOps.latestPerKey(
-      Catalog.load(spark, pipeline.checksPath),
+    val latestCheck = ReferenceOps.latestPerKey(pipeline.checksFrame,
       key = "source_name", orderCol = "last_check",
       tiebreaker = "last_check")
       .select(col("source_name"), col("robots_txt_compliant"),
@@ -215,8 +209,9 @@ final class Graft(spark: SparkSession, tableDir: String) {
     */
   def export(whereClause: Option[String], format: String, path: String)
       : DataFrame = {
-    ExportOps.export(records, whereClause, format, path)
-    ExportOps.attribution(records, "source_name", whereClause)
+    val r = records
+    ExportOps.export(r, whereClause, format, path)
+    ExportOps.attribution(r, "source_name", whereClause)
   }
 
   // ---- north-star surface over the catalog ----
@@ -336,4 +331,21 @@ final class Graft(spark: SparkSession, tableDir: String) {
       .orderBy(col("score").desc, col("record_id").asc)
       .limit(k)
   }
+}
+
+object Graft {
+
+  /** The `analytics` views by name, each built over one records frame:
+    * a caller resolves the records table once for any subset of views.
+    */
+  private val AnalyticsViews: Map[String, DataFrame => DataFrame] = Map(
+    "source_stats" -> (r => ReferenceOps.sourceStats(r,
+      key = "source_name", distinctCol = "data_type",
+      avgCol = "size_bytes", spanCol = "ingested_at")),
+    "type_counts" -> (r => ReferenceOps.typeCounts(r, "data_type")),
+    "popular_tags" -> (r => ReferenceOps.popularTags(r, col("tags"), 20)),
+    "temporal_activity" ->
+      (r => ReferenceOps.temporalActivity(r, "ingested_at")),
+    "license_distribution" ->
+      (r => ReferenceOps.licenseDistribution(r, "license_info")))
 }

@@ -2,8 +2,9 @@ package graft.ingest
 
 import graft.Catalog
 import graft.operators.ReferenceOps
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions.{lit, monotonically_increasing_id}
+import org.apache.spark.sql.types.StructType
 
 /** The `collect` verb end-to-end (ethical_crawler.py:938–966 + CLI
   * :1157–1203): compliance-gate each registered adapter (R2,
@@ -23,6 +24,16 @@ final class Pipeline(spark: SparkSession, tableDir: String) {
 
   def recordsPath: String = s"$tableDir/data_records"
   def checksPath: String = s"$tableDir/compliance_checks"
+
+  /** The two catalog tables, read with their declared schemas: no
+    * footer-inference job per read, and the `source_name` partition
+    * column stays a string whatever its directory values look like.
+    */
+  def recordsFrame: DataFrame = read(recordsPath, Pipeline.RecordsSchema)
+  def checksFrame: DataFrame = read(checksPath, Pipeline.ChecksSchema)
+
+  private def read(path: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(path)
 
   /** R2 — compliance gate: sources whose latest check carries issues
     * are skipped (ethical_crawler.py:942–948).
@@ -59,7 +70,7 @@ final class Pipeline(spark: SparkSession, tableDir: String) {
         monotonically_increasing_id())
     val existing: DataFrame =
       if (Catalog.tableExists(spark, recordsPath))
-        Catalog.load(spark, recordsPath)
+        recordsFrame
           .select(incoming.columns.filterNot(_ == "__batch_idx")
             .toIndexedSeq.head,
             incoming.columns.filterNot(_ == "__batch_idx")
@@ -94,7 +105,7 @@ final class Pipeline(spark: SparkSession, tableDir: String) {
         Seq("source_name"))
       return
     }
-    val existing = Catalog.load(spark, recordsPath)
+    val existing = recordsFrame
       .select(incoming.columns.toIndexedSeq.head,
         incoming.columns.toIndexedSeq.tail: _*)
     val kept = existing.join(incoming.select("source_name", "record_id"),
@@ -107,11 +118,10 @@ final class Pipeline(spark: SparkSession, tableDir: String) {
     Catalog.replace(spark, tmp, recordsPath)
   }
 
-  def records: Dataset[DataRecord] =
-    Catalog.load(spark, recordsPath)
-      .selectExpr("source_name", "record_id", "title", "description",
-        "data_type", "url", "metadata", "content_summary", "tags",
-        "last_updated", "ingested_at", "file_format", "size_bytes",
-        "license_info", "embedding")
-      .as[DataRecord]
+  def records: Dataset[DataRecord] = recordsFrame.as[DataRecord]
+}
+
+object Pipeline {
+  val RecordsSchema: StructType = Encoders.product[DataRecord].schema
+  val ChecksSchema: StructType = Encoders.product[ComplianceCheck].schema
 }

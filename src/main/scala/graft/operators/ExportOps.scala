@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
 
 /** The `export` verb (K1–K3 + P6 + P9 — ethical_crawler.py:1072–1100,
   * :1352–1413): optional raw WHERE predicate, then write as
@@ -24,7 +25,8 @@ object ExportOps {
       path: String): DataFrame = {
     require(Formats.contains(format), s"unsupported format: $format")
     val filtered = whereClause.fold(df)(w => df.filter(expr(w)))
-    val writer = filtered.write.mode(SaveMode.Overwrite)
+    val out = if (format == "csv") atomicOnly(filtered) else filtered
+    val writer = out.write.mode(SaveMode.Overwrite)
     format match {
       case "parquet" => writer.parquet(path)
       case "csv" => writer.option("header", "true").csv(path)
@@ -32,6 +34,19 @@ object ExportOps {
     }
     filtered
   }
+
+  /** CSV cells hold atomic values only: array, map and struct columns
+    * are rendered as their JSON text.
+    */
+  private def atomicOnly(df: DataFrame): DataFrame =
+    df.select(df.schema.fields.toIndexedSeq.map { f =>
+      val c = df.col(s"`${f.name}`")
+      f.dataType match {
+        case _: ArrayType | _: MapType | _: StructType =>
+          to_json(c).as(f.name)
+        case _ => c
+      }
+    }: _*)
 
   /** P9 — the attribution footer: distinct sources in the exported
     * slice (ethical_crawler.py:1383–1388).

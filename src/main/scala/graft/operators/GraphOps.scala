@@ -470,10 +470,16 @@ object GraphOps {
     * role localCheckpoint played, minus the extra materialization
     * job. On a cluster with reliable storage, `checkpoint()`.
     */
-  def hits(edges: DataFrame, iters: Int, k: Int): DataFrame =
+  def hits(edges: DataFrame, iters: Int, k: Int): DataFrame = {
+    requireHitsIters(iters) // before prepare's checkpoint jobs
     hits(prepare(edges), iters, k)
+  }
+
+  private def requireHitsIters(iters: Int): Unit =
+    require(iters >= 1, s"hits needs iters >= 1, got $iters")
 
   def hits(g: PreparedGraph, iters: Int, k: Int): DataFrame = {
+    requireHitsIters(iters)
     val e = g.e
     val nodes = g.nodes
     var hubs = nodes.select(col("url"), lit(InitMicro).as("h"))

@@ -108,41 +108,49 @@ object VectorIndexOps {
     * the parquet inputs on every invocation, never cached. Falls back
     * to the Spark read for anything unexpected (a merge-on-read log
     * on meta, a reader gap), so behavior can only differ in job
-    * count.
+    * count. A missing meta table is the one error raised here.
     */
   private def indexMeta(spark: SparkSession, root: String): (Int, Int) = {
     val table = s"$root/meta"
-    val viaSpark = () => {
+    val v = Versioned.currentVersion(spark, table).getOrElse(
+      throw new IllegalStateException(
+        s"uninitialized versioned table: $table"))
+    orElseOnFailure(footerMeta(spark, table, v)) {
       val m = Versioned.current(spark, table).head()
       (m.getAs[Int]("n_sub"), m.getAs[Int]("sub_dim"))
     }
-    try {
-      val v = Versioned.currentVersion(spark, table).getOrElse(
-        throw new IllegalStateException(
-          s"uninitialized versioned table: $table"))
-      val entries = Versioned.snapshotFiles(spark, table, v)
-      if (entries.exists(_.startsWith("log:"))) viaSpark()
-      else {
-        val conf = spark.sessionState.newHadoopConf()
-        entries.iterator.flatMap { rel =>
-          val p = new org.apache.hadoop.fs.Path(
-            if (rel.startsWith("/")) rel else s"$table/$rel")
-          val reader = org.apache.parquet.hadoop.ParquetReader
-            .builder(
-              new org.apache.parquet.hadoop.example.GroupReadSupport(),
-              p)
-            .withConf(conf).build()
-          try Option(reader.read()).map(g =>
-            (g.getInteger("n_sub", 0), g.getInteger("sub_dim", 0)))
-          finally reader.close()
-        }.nextOption().getOrElse(viaSpark())
-      }
-    } catch {
-      case _: IllegalStateException => throw new IllegalStateException(
-        s"uninitialized versioned table: $table")
-      case _: Exception => viaSpark()
+  }
+
+  /** The meta row of snapshot `v` read from its parquet files on the
+    * driver; None when the snapshot carries a merge-on-read log or no
+    * row.
+    */
+  private def footerMeta(spark: SparkSession, table: String, v: Int)
+      : Option[(Int, Int)] = {
+    val entries = Versioned.snapshotFiles(spark, table, v)
+    if (entries.exists(_.startsWith("log:"))) None
+    else {
+      val conf = spark.sessionState.newHadoopConf()
+      entries.iterator.flatMap { rel =>
+        val p = new org.apache.hadoop.fs.Path(
+          if (rel.startsWith("/")) rel else s"$table/$rel")
+        val reader = org.apache.parquet.hadoop.ParquetReader
+          .builder(
+            new org.apache.parquet.hadoop.example.GroupReadSupport(), p)
+          .withConf(conf).build()
+        try Option(reader.read()).map(g =>
+          (g.getInteger("n_sub", 0), g.getInteger("sub_dim", 0)))
+        finally reader.close()
+      }.nextOption()
     }
   }
+
+  /** `primary`'s answer, or `fallback` when it has none or throws any
+    * exception (whatever its class: nothing is relabelled).
+    */
+  private[operators] def orElseOnFailure[T](primary: => Option[T])(
+      fallback: => T): T =
+    (try primary catch { case _: Exception => None }).getOrElse(fallback)
 
   /** TRAIN + PERSIST: strided coarse centroids and PQ sub-codebooks
     * from the training corpus (the n8/n14 deterministic-codebook

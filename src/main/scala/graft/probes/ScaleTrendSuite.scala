@@ -36,27 +36,27 @@ object ScaleTrendSuite {
     val missing = names.filterNot(qs.contains)
     require(missing.isEmpty, s"unknown queries: $missing")
 
-    // warm both arms (fixture builds + codegen)
-    names.foreach { n =>
-      Seq(dir1, dirN).foreach { d =>
-        try runPlan(qs(n)(spark, d))
-        catch { case e: Throwable =>
-          println(s"""{"query":"$n","dir":"$d","error":"${
-            e.getClass.getSimpleName}"}""")
-        }
+    // Every failed run prints one error line; "rep" is 0 in warm-up.
+    def runOrReport(n: String, d: String, rep: Int): Option[Double] =
+      try {
+        val t0 = System.nanoTime()
+        runPlan(qs(n)(spark, d))
+        Some((System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable =>
+        println(s"""{"query":"$n","dir":"$d","rep":$rep,"error":"${
+          e.getClass.getSimpleName}"}""")
+        None
       }
-    }
+
+    // warm both arms (fixture builds + codegen)
+    names.foreach(n => Seq(dir1, dirN).foreach(runOrReport(n, _, 0)))
 
     val acc = scala.collection.mutable.Map[(String, String),
       List[Double]]().withDefaultValue(Nil)
-    (1 to reps).foreach { _ =>
+    (1 to reps).foreach { rep =>
       names.foreach { n =>
         Seq(dir1, dirN).foreach { d =>
-          try {
-            val t0 = System.nanoTime()
-            runPlan(qs(n)(spark, d))
-            acc((n, d)) ::= (System.nanoTime() - t0) / 1e9
-          } catch { case _: Throwable => () }
+          runOrReport(n, d, rep).foreach(t => acc((n, d)) ::= t)
         }
       }
     }
@@ -68,6 +68,9 @@ object ScaleTrendSuite {
           tN.min}%.4f,"t1_all":[${
           t1.reverse.map(t => f"$t%.4f").mkString(",")}],"tN_all":[${
           tN.reverse.map(t => f"$t%.4f").mkString(",")}]}""")
+      else
+        println(s"""{"query":"$n","error":"empty arm","t1_reps":${
+          t1.size},"tN_reps":${tN.size}}""")
     }
     spark.stop()
   }

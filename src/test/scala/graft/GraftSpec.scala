@@ -2,6 +2,10 @@ package graft
 
 import graft.ingest._
 import java.time.{Clock, Instant, ZoneOffset}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.types.StringType
 
 /** End-to-end verb tests: the reference CLI surface over a fresh
   * catalog dir using offline fixture adapters (SURVEY §5.2(4) golden
@@ -24,6 +28,90 @@ class GraftSpec extends SparkSpec {
     s"""{"id": "$id", "name": "$name", "description": "about $name",
        |"category": "Transport", "tags": ["traffic"],
        |"viewCount": $views, "rowsUpdatedAt": "1718000000"}""".stripMargin
+
+  /** Spark jobs started by `body`, counted by a SparkListener on the
+    * job group `body` runs under. A sentinel job in a second group runs
+    * after `body`; the bus delivers events in order, so once the
+    * sentinel's start arrives every job of `body` has been counted.
+    */
+  def jobsOf(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"graftspec-jobs-${System.nanoTime()}"
+    val counted = new AtomicInteger
+    val done = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id"))
+          .foreach { g =>
+            if (g == group) counted.incrementAndGet()
+            else if (g == s"$group-end") done.countDown()
+          }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-end", "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(done.await(60, TimeUnit.SECONDS), "sentinel job never seen")
+      counted.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("catalog reads: declared schemas, no inference job, records " +
+      "resolved once per analytics call") {
+    val g = new Graft(spark, tmpDir("graftjobs"))
+    assert(g.collect(Seq(nycFixture(item("aa-1", "Traffic Volume", 10),
+      item("bb-2", "Bike Counts", 20)))) == 2)
+    assert(jobsOf(g.records) == 0)
+    assert(jobsOf(g.analytics()) == 0)
+    assert(g.analytics().keySet == Set("source_stats", "type_counts",
+      "popular_tags", "temporal_activity", "license_distribution"))
+    g.analyticsMaterialized("type_counts").collect() // build the view
+    // a fresh view: read the materialization and scan it, nothing else
+    val hitJobs = jobsOf(g.analyticsMaterialized("type_counts").collect())
+    assert(hitJobs <= 2, s"fresh-view read ran $hitJobs jobs")
+  }
+
+  test("an all-digit source_name round-trips as a string") {
+    val name = "0311"
+    val base = "https://digits.example.org"
+    val ad = new Adapter {
+      val source = DataSource(name, base, s"$base/api", false, 10.0,
+        s"$base/terms", s"$base/robots.txt", "Public Domain")
+      val apiKey: Option[String] = None
+      val fetcher = new FixtureFetcher(Map(s"$base/robots.txt" -> (404, "")))
+      val clock = GraftSpec.this.clock
+      val robots = new RobotsChecker(fetcher, clock)
+      def discover(): Seq[DataRecord] = Seq(DataRecord(name, "d-1",
+        "Digit Source Dataset", Some("about digits"), "dataset",
+        s"$base/d-1", "{}", None, Seq("digits"), None,
+        java.sql.Timestamp.from(clock.instant()), None, Some(1L),
+        Some("public")))
+    }
+    val g = new Graft(spark, tmpDir("graftdigits"))
+    assert(g.collect(Seq(ad)) == 1)
+    assert(g.records.schema("source_name").dataType == StringType)
+    val st = g.status().collect()
+    assert(st.map(_.getAs[String]("source_name")).toSeq == Seq(name))
+    assert(st.head.getAs[Long]("n_records") == 1L)
+    assert(st.head.getAs[Boolean]("robots_txt_compliant"))
+    val hits = g.search(None, source = Some(name)).collect()
+    assert(hits.map(_.getAs[String]("source_name")).toSeq == Seq(name))
+  }
+
+  test("csv export renders array columns as JSON text") {
+    val g = new Graft(spark, tmpDir("graftcsv"))
+    assert(g.collect(Seq(nycFixture(item("aa-1", "Traffic Volume", 10),
+      item("bb-2", "Bike Counts", 20)))) == 2)
+    val out = tmpDir("graftcsv") + "/export"
+    val att = g.export(None, "csv", out).collect()
+    assert(att.map(_.getString(0)).toSeq == Seq("NYC Open Data"))
+    val back = spark.read.option("header", "true").csv(out)
+    assert(back.count() == 2)
+    assert(back.select("tags").collect().map(_.getString(0)).toSeq ==
+      Seq("""["traffic"]""", """["traffic"]"""))
+  }
 
   test("collect → search → analytics → status → export, end to end") {
     val g = new Graft(spark, tmpDir("graft"))

@@ -105,6 +105,20 @@ class GraphSpec extends SparkSpec {
     assert(r("A")._1 == 1000000L && r("H")._2 == 1000000L)
   }
 
+  test("hits: iters < 1 is a typed precondition error, not an NPE") {
+    val edges = Seq(("h1", "x")).toDF("src", "dst")
+    Seq(0, -1).foreach { n =>
+      val e = intercept[IllegalArgumentException] {
+        GraphOps.hits(edges, iters = n, k = 10)
+      }
+      assert(e.getMessage.contains(s"iters >= 1, got $n"))
+    }
+    val e = intercept[IllegalArgumentException] {
+      GraphOps.hits(GraphOps.prepare(edges), iters = 0, k = 10)
+    }
+    assert(e.getMessage.contains("iters >= 1"))
+  }
+
   test("pageEdges: harvested + tree edges have the expected shape") {
     val docs = Seq((0L, "src_a", "alpha beta"), (5L, "src_b", "gamma"))
       .toDF("doc_id", "source", "text")

@@ -123,4 +123,24 @@ class VectorIndexSpec extends SparkSpec {
     assert(rep2 == ((victimIds.size.toLong, 0L,
       victimIds.size.toLong)))
   }
+
+  test("index meta: only a missing meta table reads as uninitialized; " +
+      "other failures take the Spark fallback") {
+    val root = tmpDir("vecidxmeta") + "/index"
+    val e = intercept[IllegalStateException] {
+      VectorIndexOps.appendVectors(Tables.embeddings(spark, sfSmoke), root)
+    }
+    assert(e.getMessage == s"uninitialized versioned table: $root/meta")
+    // a non-"uninitialized" ISE in the driver-side read falls through
+    assert(VectorIndexOps.orElseOnFailure[Int](
+      throw new IllegalStateException("reader gap"))(7) == 7)
+    assert(VectorIndexOps.orElseOnFailure(Option(3))(7) == 3)
+    assert(VectorIndexOps.orElseOnFailure[Int](None)(7) == 7)
+    // the fallback's own failure surfaces as itself
+    val fb = intercept[IllegalStateException] {
+      VectorIndexOps.orElseOnFailure[Int](None)(
+        throw new IllegalStateException("spark read failed"))
+    }
+    assert(fb.getMessage == "spark read failed")
+  }
 }
